@@ -46,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .filestats import local_path
+
 BLOOM_NAME = "_blooms.json"
 
 
@@ -98,13 +100,9 @@ def collect_dir_blooms(spark: SparkSession, ddir: str, cols: list[str],
     (input file, column); one shuffle OR-folds partials per file. The
     driver only ever holds files × cols × m_bytes — manifest-sized.
     Best-effort like stats collection: unreadable dir → None."""
-    if "://" in ddir and not ddir.startswith("file:"):
+    local = local_path(ddir)
+    if local is None:
         return None
-    local = ddir
-    if local.startswith("file:"):
-        from urllib.parse import urlparse
-
-        local = urlparse(local).path or local
     sidecar = os.path.join(local, BLOOM_NAME)
     if not overwrite and os.path.exists(sidecar):
         return load_dir_blooms(local)

@@ -54,6 +54,21 @@ _MAX_COLS = 48  # stats columns per file cap — sidecar stays metadata-sized
 _UTC = _dt.timezone.utc
 
 
+def local_path(uri: str) -> str | None:
+    """The local-filesystem path a Spark path names, for Python-side
+    file access: a `file:` URI in every form Spark accepts (file:/x,
+    file:///x) → its path; a bare path → itself, VERBATIM (urlparse
+    would strip a literal '#' or '?' in a directory name as
+    fragment/query); any other scheme (object stores) → None."""
+    if uri.startswith("file:"):
+        from urllib.parse import urlparse
+
+        return urlparse(uri).path or uri
+    if "://" in uri:
+        return None
+    return uri
+
+
 # ---------------------------------------------------------------------------
 # collection (commit side)
 # ---------------------------------------------------------------------------
@@ -189,12 +204,9 @@ def collect_dir_stats(ddir: str, overwrite: bool = False,
     and the dir is big enough, the footers are parsed in EXECUTOR
     Python workers instead (separate processes, one tiny job); the
     threaded driver path remains the fallback and the small-dir path."""
-    if "://" in ddir and not ddir.startswith("file:"):
+    ddir = local_path(ddir)
+    if ddir is None:
         return None
-    if ddir.startswith("file:"):
-        from urllib.parse import urlparse
-
-        ddir = urlparse(ddir).path or ddir
     sidecar = os.path.join(ddir, STATS_NAME)
     if not overwrite and os.path.exists(sidecar):
         return load_dir_stats(ddir)

@@ -36,7 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from swarm_spark.session import local_frame
+
 __all__ = ["validate", "ExpectationError", "fail_on_violations"]
+
+REPORT_DDL = ("rule string, target string, checked bigint, violations bigint, "
+              "passed boolean")
 
 
 class ExpectationError(RuntimeError):
@@ -184,10 +189,7 @@ def validate(df: DataFrame, rules: list[tuple]) -> DataFrame:
             c = int(r["_checked"]) if r is not None else 0
             v = int(r["_violations"]) if r is not None else 0
             rows.append(("referential", col, c, v, v == 0))
-    out = spark.createDataFrame(
-        rows,
-        "rule string, target string, checked bigint, violations bigint, passed boolean",
-    )
+    out = local_frame(spark, rows, REPORT_DDL)
     return out.orderBy("rule", "target")
 
 

@@ -20,6 +20,11 @@ Scale notes (10^12 turns):
     (low-cardinality keys, map-side partial agg + AQE).
   * `assume_ordered=True` removes the window entirely when the source
     guarantees unique turn_idx per conv (Iceberg sort order at write).
+  * The schema_rules and tool_dim dimension tables are JVM-local
+    relations (session.local_frame), so their broadcasts are one-task
+    JVM jobs. A caller-supplied tool_dim built with
+    `createDataFrame(<list>)` instead pays a Python-worker job on every
+    query that broadcasts it; build it with local_frame.
   * The multi-sink fan-out is ONE write job (write_mode='single_pass'):
     every sink's rows stage under one partitionBy(_sink, _p) output,
     adopted per-sink as snapshots — sink count costs metadata commits,
@@ -39,10 +44,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .filestats import local_path
 from .functions.extract import extract_columns
 from .functions.normalize import content_hash_id
 from .manifest import STATE_COMPLETED, STATE_FAILED, STATE_RUNNING, ManifestStore
-from .rules import EventRule, SchemaRule, route
+from .rules import EventRule, SchemaRule, route, rules_to_df
+from .session import local_frame
 from .tablestore import IcepackCatalog
 
 PAYLOAD_FIELDS = [
@@ -51,12 +58,24 @@ PAYLOAD_FIELDS = [
     "tool_family", "is_privileged",
 ]
 
+# one LoadLog row per batch (≙ model.LoadLog, bigquery.go:77-83)
+AUDIT_DDL = (
+    "request_id string, batch_id string, success boolean, error string, "
+    "input_rows bigint, routed_rows bigint, elapsed_sec double, "
+    "ingests array<struct<sink:string,log_count:bigint,snapshot_id:bigint,"
+    "success:boolean>>"
+)
+
 
 @dataclass
 class PipelineConfig:
     event_rules: list[EventRule]
     schema_rules: list[SchemaRule]
     warehouse: str
+    # broadcast enrichment dimension (tool → family/privilege). Build it
+    # with session.local_frame (as presets.default_tool_dim does): a
+    # createDataFrame(<list>) dimension runs a Python-worker job on
+    # every query that broadcasts it.
     tool_dim: DataFrame | None = None
     on_unmatched: str = "skip"       # record-level default (load.go:216-219)
     assume_ordered: bool = False     # skip the ordering window at scale
@@ -103,8 +122,12 @@ class PipelineConfig:
                     f"event rule {er.rule_id} targets unknown schema "
                     f"{er.schema_name!r} (Source.Validate, policy.go:32-52)"
                 )
+        # the catalog, the manifest and the staged recount touch these
+        # dirs from Python: a file: URI must name its plain path there
+        self.warehouse = local_path(self.warehouse) or self.warehouse
         if not self.manifest_dir:
             self.manifest_dir = f"{self.warehouse}/_manifest"
+        self.manifest_dir = local_path(self.manifest_dir) or self.manifest_dir
 
 
 @dataclass
@@ -133,17 +156,9 @@ def _parquet_footer_rows(root: str) -> int | None:
     None for non-local paths (object stores) — the caller then uses
     the distributed count, which at that scale is metadata-bound
     anyway."""
-    if root.startswith("file:"):
-        from urllib.parse import urlparse
-
-        # every file-URI form Spark accepts (file:/x, file:///x)
-        path = urlparse(root).path or root
-    elif "://" in root:
+    path = local_path(root)
+    if path is None:
         return None  # object store → distributed fallback
-    else:
-        # bare local path: use VERBATIM — urlparse would strip a
-        # literal '#' or '?' in a directory name as fragment/query
-        path = root
     try:
         import pyarrow.parquet as pq
     except ImportError:
@@ -179,6 +194,9 @@ class IngestPipeline:
                 "adoption (icepack); use write_mode='per_sink' with this one"
             )
         self.manifest = ManifestStore(config.manifest_dir)
+        # schema_rules are fixed for the pipeline's lifetime: build the
+        # dimension once (compile-once, policy/client.go:111-118)
+        self.rules_dim = rules_to_df(spark, config.schema_rules)
 
     # ------------------------------------------------------------------
     # plan builders (pure transformations — composable, testable)
@@ -225,14 +243,11 @@ class IngestPipeline:
         df = self.enriched(self.parsed(transcripts))
         df = route(df, cfg.event_rules, on_unmatched=cfg.on_unmatched)
 
-        # broadcast hash join against the schema_rules dimension
-        from .rules import rules_to_df
-
-        dim = rules_to_df(self.spark, cfg.schema_rules)
+        # broadcast hash join against the schema_rules dimension;
         # 'keep' routes unmatched rows through with null sink_table so
         # run() can divert them to the dead-letter table
         join_how = "left" if cfg.on_unmatched == "keep" else "inner"
-        df = df.join(F.broadcast(dim), "schema_name", join_how)
+        df = df.join(F.broadcast(self.rules_dim), "schema_name", join_how)
 
         payload = F.struct(*[F.col(c) for c in PAYLOAD_FIELDS if c in df.columns])
         # id: per-rule id_field, else content hash (types.go:27-34)
@@ -635,15 +650,14 @@ class IngestPipeline:
             elapsed = time.time() - t0
 
             if with_audit:
-                audit = self.spark.createDataFrame(
+                audit = local_frame(
+                    self.spark,
                     [(
                         request_id, batch_id, True, None,
                         input_rows, routed_rows, float(elapsed),
                         [(s, per_sink_rows[s], int(snapshot_ids[s]), True) for s in sinks],
                     )],
-                    "request_id string, batch_id string, success boolean, error string, "
-                    "input_rows bigint, routed_rows bigint, elapsed_sec double, "
-                    "ingests array<struct<sink:string,log_count:bigint,snapshot_id:bigint,success:boolean>>",
+                    AUDIT_DDL,
                 ).withColumn("started_at", started_at)
                 # audit table month-partitioned on started_at (bigquery.go:77-83)
                 commit_append(cfg.audit_table, audit,

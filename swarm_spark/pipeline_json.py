@@ -28,11 +28,18 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.normalize import content_hash_json_udf, nil_strip_json_udf
 from .manifest import STATE_COMPLETED, STATE_FAILED, STATE_RUNNING, ManifestStore
 from .rules import EventRule, route
+from .session import local_frame
 from .tablestore import IcepackCatalog
+
+AUDIT_JSON_DDL = (
+    "request_id string, batch_id string, success boolean, error string, "
+    "table_schemas string, log_counts string"
+)
 
 
 @dataclass(frozen=True)
@@ -300,6 +307,18 @@ def _residual_predicate(
     return out
 
 
+def _sample_schema(docs: DataFrame, sample_rows: int) -> T.StructType:
+    """Spark's JSON schema inference over the first `sample_rows` docs
+    of a one-string-column frame, run in the JVM
+    (DataFrameReader.json over a Dataset[String]): the same inference
+    as `spark.read.json(<rdd of str>)` without its Python-worker hop."""
+    jvm = docs.sparkSession._jvm
+    jds = getattr(docs.limit(sample_rows)._jdf, "as")(
+        jvm.org.apache.spark.sql.Encoders.STRING())
+    jschema = docs.sparkSession._jsparkSession.read().json(jds).schema()
+    return T.StructType.fromJson(json.loads(jschema.json()))
+
+
 def infer_json_schema(
     spark: SparkSession,
     docs_only: DataFrame,
@@ -316,8 +335,8 @@ def infer_json_schema(
     Strategy (≙ the fold of bqs.Infer+Merge over every record,
     /root/reference/pkg/usecase/bigquery.go:47-62, at a fraction of the
     cost):
-      1. infer on a BOUNDED sample (limit(sample_rows) BEFORE the RDD
-         hop — the only Python transfer is ≤ sample_rows docs);
+      1. infer on a BOUNDED sample (limit(sample_rows), read as JSON in
+         the JVM — no Python transfer at all, see _sample_schema);
       2. union-merge with the live table schema (numeric widths widen
          across inference rounds; genuine type conflict stays a hard
          error);
@@ -327,7 +346,7 @@ def infer_json_schema(
          every struct path) and type conflicts (from_json null where
          the raw path is present) — no Python;
       4. records the sample missed become the next round's sample —
-         every RDD hop stays bounded. Converges in 1 round for
+         every sample stays bounded. Converges in 1 round for
          homogeneous batches; heterogeneous batches pay one extra JVM
          scan per new key-shape cohort.
 
@@ -341,8 +360,7 @@ def infer_json_schema(
     schema = live_schema
     remaining = docs_only
     for _ in range(max_rounds):
-        strs = remaining.limit(sample_rows).rdd.map(lambda r: r[0])  # bounded hop
-        inferred = spark.read.json(strs).schema
+        inferred = _sample_schema(remaining, sample_rows)
         schema = _merge_inferred(schema, inferred)
         if defer_check:
             # optimistic mode (r4): skip the dedicated coverage scan —
@@ -643,21 +661,19 @@ class JsonIngest:
                     missed_docs = docs_only.filter(
                         _residual_predicate("data", inferred, nulls_stripped=True)
                     )
-                    strs = missed_docs.limit(self.infer_sample_rows).rdd.map(
-                        lambda row: row[0]
-                    )
                     inferred = _merge_inferred(
-                        inferred, self.spark.read.json(strs).schema
+                        inferred,
+                        _sample_schema(missed_docs, self.infer_sample_rows),
                     )
                 snapshot_ids[r.sink_table] = snap["snapshot_id"]
                 per_sink[r.sink_table] = snap["added_rows"]
                 schemas_json[r.sink_table] = inferred.json()
 
-            audit = self.spark.createDataFrame(
+            audit = local_frame(
+                self.spark,
                 [(request_id, batch_id, True, None,
                   json.dumps(schemas_json), json.dumps(per_sink))],
-                "request_id string, batch_id string, success boolean, error string, "
-                "table_schemas string, log_counts string",
+                AUDIT_JSON_DDL,
             ).withColumn("started_at", F.current_timestamp())
             commit_append("_audit_json", audit,
                           partition_unit="month", ts_col="started_at")

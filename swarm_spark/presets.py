@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .rules import EventRule, SchemaRule
+from .session import local_frame
 
 
 def default_event_rules() -> list[EventRule]:
@@ -40,15 +41,17 @@ def default_schema_rules() -> list[SchemaRule]:
     ]
 
 
+TOOL_DIM_DDL = "tool string, tool_family string, is_privileged boolean"
+TOOL_DIM_ROWS = [
+    ("search", "retrieval", False), ("browser", "retrieval", False),
+    ("python", "execution", True), ("bash", "execution", True),
+    ("sql", "execution", True), ("calc", "compute", False),
+    ("mail", "comms", True), ("files", "storage", True),
+    ("purchase_svc", "commerce", True), ("signup_svc", "identity", False),
+    ("error_reporter", "telemetry", False),
+]
+
+
 def default_tool_dim(spark: SparkSession) -> DataFrame:
-    rows = [
-        ("search", "retrieval", False), ("browser", "retrieval", False),
-        ("python", "execution", True), ("bash", "execution", True),
-        ("sql", "execution", True), ("calc", "compute", False),
-        ("mail", "comms", True), ("files", "storage", True),
-        ("purchase_svc", "commerce", True), ("signup_svc", "identity", False),
-        ("error_reporter", "telemetry", False),
-    ]
-    return spark.createDataFrame(
-        rows, "tool string, tool_family string, is_privileged boolean"
-    )
+    """The tool_dim preset as a JVM-local relation (session.local_frame)."""
+    return local_frame(spark, TOOL_DIM_ROWS, TOOL_DIM_DDL)

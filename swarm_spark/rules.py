@@ -12,7 +12,10 @@ The Spark-first re-expression: rules are DATA (tiny config rows), the
 time, and set-valued matching becomes array construction + explode.
 Sink/enrichment attributes come from broadcast hash joins against the
 schema_rules / tool_dim dimension tables — the relational reading of
-Rego's per-source constant matching (SURVEY.md §2.6).
+Rego's per-source constant matching (SURVEY.md §2.6). Both are
+JVM-local relations (session.local_frame): broadcasting them is a
+one-task JVM job. A tool_dim built with `createDataFrame(<list>)`
+would instead pay a Python-worker job on every query that uses it.
 
 Match-cardinality semantics preserved:
   * event level: 0 matches → error (event.go:16-18)   [route(on_unmatched='error')]
@@ -27,7 +30,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 _OPS = ("eq", "startswith", "endswith", "contains", "rlike")
+
+RULES_DDL = (
+    "schema_name string, sink_table string, partition_unit string, "
+    "id_field string, ts_field string, drop_fields array<string>"
+)
 
 
 @dataclass(frozen=True)
@@ -133,17 +143,13 @@ def route(
 
 
 def rules_to_df(spark: SparkSession, schema_rules: list[SchemaRule]) -> DataFrame:
-    """schema_rules as a dimension DataFrame for the broadcast join."""
+    """schema_rules as a JVM-local dimension table for the broadcast join."""
     rows = [
         (r.schema_name, r.sink_table, r.partition_unit, r.id_field, r.ts_field,
          list(r.drop_fields))
         for r in schema_rules
     ]
-    return spark.createDataFrame(
-        rows,
-        "schema_name string, sink_table string, partition_unit string, "
-        "id_field string, ts_field string, drop_fields array<string>",
-    )
+    return local_frame(spark, rows, RULES_DDL)
 
 
 def enrich(

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from swarm_spark import filestats
+from swarm_spark.session import local_frame
 
 _PART_FMT = {
     "hour": "yyyy-MM-dd-HH",
@@ -755,7 +756,7 @@ class IcepackTable:
                 obs = Observation()
                 kept = kept.observe(obs, F.count(F.lit(1)).alias("n"))
             else:
-                kept = spark.createDataFrame([], schema)
+                kept = local_frame(spark, [], schema)
             merged = kept.unionByName(incoming, allowMissingColumns=True)
             cols = [
                 F.col(f.name) if f.name in merged.columns
@@ -1493,7 +1494,7 @@ class IcepackTable:
             + [T.StructField("_change_type", T.StringType(), False),
                T.StructField("_commit_snapshot_id", T.LongType(), False)])
         if not chain:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         bad = [s for s in chain
                if s["op"] not in ("append", "mor_delete")]
         if bad:
@@ -1569,7 +1570,7 @@ class IcepackTable:
             prev_dirs = list(snap["data_dirs"])
             prev_dels = list(snap.get("deletes") or [])
         if not parts:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1602,7 +1603,7 @@ class IcepackTable:
         schema = T.StructType.fromJson(json.loads(to_snap["schema"]))
         new = self.read(spark, snapshot_id=to_snap["snapshot_id"])
         if from_snapshot_id is None:
-            old = spark.createDataFrame([], schema)
+            old = local_frame(spark, [], schema)
         else:
             old = self.read(spark, snapshot_id=from_snapshot_id)
         cols = [
@@ -1641,7 +1642,7 @@ class IcepackTable:
             to = self.snapshot(to_snapshot_id) if to_snapshot_id is not None \
                 else self.current_snapshot()
             schema = T.StructType.fromJson(json.loads(to["schema"]))
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         bad = [s for s in chain if s["op"] != "append"]
         if bad:
             raise IncrementalReadError(
@@ -1665,7 +1666,7 @@ class IcepackTable:
         new_dirs = [d for d in to_snap["data_dirs"] if d not in base]
         schema = T.StructType.fromJson(json.loads(to_snap["schema"]))
         if not new_dirs:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         df = self._scan_dirs(spark, new_dirs)
         if "_p" in df.columns:
             df = df.drop("_p")
@@ -1836,13 +1837,13 @@ class IcepackTable:
             raise FileNotFoundError(f"table {self.name} has no snapshots")
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
         if not snap["data_dirs"]:  # empty-append-only table
-            df = spark.createDataFrame([], schema)
+            df = local_frame(spark, [], schema)
             return filestats.residual_filter(df, prune) if prune else df
         scan = snap["data_dirs"]
         if prune:
             scan, _total, _kept = filestats.prune_files(scan, prune)
             if not scan:  # every file provably excluded
-                df = spark.createDataFrame([], schema)
+                df = local_frame(spark, [], schema)
                 return filestats.residual_filter(df, prune)
         pending = snap.get("deletes") or []
         df = self._scan_dirs(spark, scan, keep_s=bool(pending))

@@ -267,3 +267,56 @@ def test_single_pass_drop_fields_invisible_and_partitioned(spark, transcripts, t
     # hour-partitioned (presets): _p format yyyy-MM-dd-HH
     p_dirs = [d for d in os.listdir(ddir) if d.startswith("_p=")]
     assert all(len(d.split("=")[1]) == 13 for d in p_dirs)
+
+
+def test_file_uri_warehouse_commits_with_recount(spark, transcripts, tmp_path,
+                                                 monkeypatch):
+    """A `file:///…` warehouse: a full batch and a light streaming epoch
+    both commit (the staged recount used to skip every `_sink=` dir it
+    could not os.path.isdir, then abort the healthy batch with a count
+    mismatch), and the recount is still enforced."""
+    import os
+
+    from swarm_spark import filestats
+    from swarm_spark.pipeline import IngestPipeline, PipelineConfig
+    from swarm_spark.streaming.ingest import start_ingest_stream, stream_transcripts
+
+    wh = tmp_path / "wh"
+    uri = "file://" + str(wh)
+
+    def pipe():
+        return IngestPipeline(spark, PipelineConfig(
+            event_rules=default_event_rules(),
+            schema_rules=default_schema_rules(),
+            warehouse=uri,
+            tool_dim=default_tool_dim(spark),
+        ))
+
+    batch = pipe()
+    assert batch.config.warehouse == str(wh)
+    res = batch.run(transcripts, batch_id="b1")
+    exp = {r.sink_table: r["count"] for r in
+           batch.routed(transcripts).groupBy("sink_table").count().collect()}
+    assert res.per_sink_rows == exp
+
+    src = str(tmp_path / "src")
+    transcripts.write.parquet(src)
+    q = start_ingest_stream(stream_transcripts(spark, src), pipe(),
+                            str(tmp_path / "ckpt"), epoch_mode="light")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    for sink, n in exp.items():
+        assert batch.catalog.table(sink).read(spark).count() == 2 * n, sink
+    assert not os.path.exists("file:")  # no cwd-relative 'file:' tree
+
+    real = filestats.collect_dir_stats
+
+    def one_row_short(ddir, *a, **kw):
+        st = real(ddir, *a, **kw)
+        f = next(iter(st["files"].values()))
+        f["rows"] -= 1
+        return st
+
+    monkeypatch.setattr(filestats, "collect_dir_stats", one_row_short)
+    with pytest.raises(RuntimeError, match="staged-write count mismatch"):
+        pipe().run(transcripts, batch_id="b2")
