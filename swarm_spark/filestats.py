@@ -5,7 +5,7 @@ null_value_counts) in its manifests and prunes files whose ranges
 cannot satisfy a scan predicate before any task is scheduled. This
 module gives icepack the same capability: at commit time the parquet
 FOOTERS of a data dir (metadata only, ~8 KB/file — the same cost class
-as the driver-side append-count verify, pipeline.py:_parquet_footer_rows)
+as the staged-write recount in pipeline.py, which sums these footers)
 are aggregated into one `_stats.json` sidecar per data dir; at read
 time a conjunctive predicate prunes the file list BEFORE the parquet
 relation is built, so skipped files are never even opened.

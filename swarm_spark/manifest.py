@@ -18,6 +18,10 @@ identical sink contents — the resume/idempotency contract of the
 north_rule.
 
 Defaults mirror usecase.go:39-42: timeout 30 min, TTL 7 d.
+
+BatchTxn is the one owner of a batch's partial-failure contract: both
+ingests (pipeline.IngestPipeline, pipeline_json.JsonIngest) commit
+through it and never touch the manifest or a rollback directly.
 """
 
 from __future__ import annotations
@@ -142,3 +146,85 @@ class ManifestStore:
         if snapshot_ids is not None:
             cur.snapshot_ids = snapshot_ids
         self._put(cur)
+
+
+class BatchTxn:
+    """One attempt at one batch, exactly-once on PARTIAL failure
+    (≙ State.Acquired + pending-stream abort, state.go:19-31 /
+    bq client.go:240-263):
+
+      * acquire through the manifest gate (`acquired` False → skip);
+      * per-table snapshot ids are recorded in the manifest AS THEY
+        COMMIT;
+      * a table a prior failed attempt left committed (its rollback was
+        impossible: another batch committed on top) is resume-skipped,
+        not re-appended;
+      * on failure, this attempt's commits are rolled back newest
+        first; whatever cannot be rolled back stays recorded so the
+        retry skips it — either way a retry reconciles to exactly one
+        copy of the batch per table;
+      * the batch is marked completed or failed on leaving the `with`.
+
+        txn = BatchTxn(manifest, catalog, batch_id, request_id)
+        if txn.acquired:
+            with txn:
+                txn.commit("sink", lambda t: t.append(df))
+    """
+
+    def __init__(self, manifest: ManifestStore, catalog, batch_id: str,
+                 request_id: str):
+        self.manifest = manifest
+        self.catalog = catalog
+        self.batch_id = batch_id
+        self.request_id = request_id
+        self.state, self.acquired = manifest.get_or_create(batch_id, request_id)
+        self.prior = dict(self.state.snapshot_ids or {}) if self.acquired else {}
+        self.committed = dict(self.prior)
+        self.attempt: list[tuple[str, int]] = []  # this attempt's commits, in order
+        self.t0 = time.time()
+
+    def commit(self, table_name: str, write) -> dict:
+        """`write(table)` → snapshot dict, unless a prior attempt's
+        snapshot of `table_name` is still in the table's log: then that
+        snapshot is returned and nothing is written."""
+        t = self.catalog.table(table_name)
+        if table_name in self.prior:
+            for s in t.snapshots():
+                if s["snapshot_id"] == self.prior[table_name]:
+                    return s
+            del self.prior[table_name]  # rolled back / expired: re-append
+        snap = write(t)
+        self.committed[table_name] = snap["snapshot_id"]
+        self.attempt.append((table_name, snap["snapshot_id"]))
+        self.manifest.update(self.batch_id, STATE_RUNNING, self.committed)
+        return snap
+
+    def fresh(self, table_name: str) -> bool:
+        """Whether this attempt (not a prior one) committed `table_name`."""
+        return any(name == table_name for name, _ in self.attempt)
+
+    def undo(self, table_name: str) -> None:
+        """Roll back this attempt's own commit to `table_name` so the
+        table can be rewritten (the JSON schema-coverage retry); a
+        refused rollback aborts the batch."""
+        sid = self.committed[table_name]
+        if not self.catalog.table(table_name).rollback(sid):
+            raise RuntimeError(
+                f"{table_name}: cannot roll back snapshot {sid} for a "
+                "rewrite (another commit landed on top)")
+        del self.committed[table_name]
+        self.attempt.remove((table_name, sid))
+        self.manifest.update(self.batch_id, STATE_RUNNING, self.committed)
+
+    def __enter__(self) -> BatchTxn:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> bool:
+        if exc_type is None:
+            self.manifest.update(self.batch_id, STATE_COMPLETED, self.committed)
+            return False
+        for table_name, sid in reversed(self.attempt):
+            if self.catalog.table(table_name).rollback(sid):
+                self.committed.pop(table_name, None)
+        self.manifest.update(self.batch_id, STATE_FAILED, self.committed)
+        return False

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions.normalize import content_hash_json_udf, nil_strip_json_udf
-from .manifest import STATE_COMPLETED, STATE_FAILED, STATE_RUNNING, ManifestStore
+from .manifest import BatchTxn, ManifestStore
 from .rules import EventRule, route
 from .session import local_frame
 from .tablestore import IcepackCatalog
@@ -547,146 +547,106 @@ class JsonIngest:
 
     # -- execute -------------------------------------------------------
     def run(self, path: str, batch_id: str, request_id: str | None = None) -> dict:
-        request_id = request_id or uuid.uuid4().hex
-        state, acquired = self.manifest.get_or_create(batch_id, request_id)
-        if not acquired:
+        """One exactly-once batch under the same partial-failure
+        contract as IngestPipeline.run (manifest.BatchTxn)."""
+        txn = BatchTxn(self.manifest, self.catalog, batch_id,
+                       request_id or uuid.uuid4().hex)
+        if not txn.acquired:
             return {"batch_id": batch_id, "skipped": True,
-                    "snapshot_ids": state.snapshot_ids or {}}
-        t0 = time.time()
-        # same partial-failure contract as IngestPipeline.run: commits
-        # are recorded in the manifest as they land, rolled back on
-        # failure, and resume-skipped on retry when rollback was not
-        # possible (another batch committed on top)
-        prior = dict(state.snapshot_ids or {})
-        committed = dict(prior)
-        attempt: list[tuple[str, int]] = []
-
-        fresh_appends: set[str] = set()
-
-        def commit_append(table_name: str, df: DataFrame, **kw) -> dict:
-            t = self.catalog.table(table_name)
-            if table_name in prior:
-                for s in t.snapshots():
-                    if s["snapshot_id"] == prior[table_name]:
-                        return s
-                del prior[table_name]
-            snap = t.append(df, **kw)
-            committed[table_name] = snap["snapshot_id"]
-            attempt.append((table_name, snap["snapshot_id"]))
-            fresh_appends.add(table_name)
-            self.manifest.update(batch_id, STATE_RUNNING, committed)
-            return snap
-
-        def uncommit_append(table_name: str, snapshot_id: int) -> None:
-            """Coverage-retry path: undo OUR OWN freshly-committed
-            append so the sink can be rewritten with a wider schema."""
-            if not self.catalog.table(table_name).rollback(snapshot_id):
-                raise RuntimeError(
-                    f"{table_name}: cannot roll back snapshot {snapshot_id} "
-                    "for schema-coverage rewrite (another commit landed on top)"
-                )
-            committed.pop(table_name, None)
-            attempt.remove((table_name, snapshot_id))
-            fresh_appends.discard(table_name)
-            self.manifest.update(batch_id, STATE_RUNNING, committed)
-
-        try:
+                    "snapshot_ids": txn.state.snapshot_ids or {}}
+        with txn:
             recs = self.records(path).persist()
-            recs.count()
-            snapshot_ids: dict[str, int] = {}
-            per_sink: dict[str, int] = {}
-            schemas_json: dict[str, str] = {}
-            for r in self.rules:
-                part = recs.filter(F.col("sink_table") == r.sink_table)
-                docs_only = part.select("data")
-                if docs_only.isEmpty():
-                    continue
-                # Bounded-sample inference + live-schema merge ≙ fold of
-                # bqs.Infer+Merge (bigquery.go:47-62) without the full
-                # Python round-trip. The coverage check (records the
-                # candidate schema would LOSE data from) is OPTIMISTIC
-                # since r4: instead of a dedicated pre-write scan (which
-                # measured 35% of sf1 ingest wall — NOTES_r4), the
-                # residual predicate rides the WRITE job as an
-                # Observation; a non-zero count (rare: the bounded
-                # sample missed a key shape) rolls the sink's append
-                # back, widens the schema from the actually-missed
-                # records, and rewrites. Common case: zero extra scans.
-                # Trade: a non-converged round now costs a write+rollback
-                # instead of a scan — right when misses are rare.
-                inferred = self._infer_for_sink(r, docs_only, defer_check=True)
-                for cov_round in range(5):
-                    obs = Observation(f"cov-{uuid.uuid4().hex[:8]}")
-                    # Parse FIRST (own projection), then flag: the
-                    # typed-null checks live on conditional branches
-                    # where Spark's CSE cannot extract a repeated
-                    # from_json, so the predicate must reference the
-                    # materialized _parsed attribute — each doc is
-                    # parsed exactly once across output + coverage.
-                    staged = part.select(
-                        "id", "timestamp", "data",
-                        F.from_json("data", inferred).alias("_parsed"),
-                    )
-                    flagged = staged.select(
-                        "id",
-                        "timestamp",
-                        "_parsed",
-                        _residual_predicate(
-                            "data", inferred, nulls_stripped=True,
-                            parsed_col=F.col("_parsed"),
-                        ).cast("long").alias("_cov_missed"),
-                    ).observe(obs, F.sum("_cov_missed").alias("missed"))
-                    out = flagged.select(
-                        "id",
-                        F.lit(request_id).alias("ingest_id"),
-                        "timestamp",
-                        F.current_timestamp().alias("ingested_at"),
-                        F.col("_parsed").alias("data"),
-                    )
-                    snap = commit_append(
-                        r.sink_table, out,
-                        partition_unit=r.partition_unit, ts_col="timestamp",
-                    )
-                    if r.sink_table not in fresh_appends:
-                        break  # resumed from a prior attempt: no job ran
-                    if not int(obs.get.get("missed") or 0):
-                        break
-                    if cov_round == 4:
-                        raise RuntimeError(
-                            "json schema inference did not converge in 5 "
-                            f"rounds for sink {r.sink_table} "
-                            f"(sample_rows={self.infer_sample_rows})"
-                        )
-                    uncommit_append(r.sink_table, snap["snapshot_id"])
-                    missed_docs = docs_only.filter(
-                        _residual_predicate("data", inferred, nulls_stripped=True)
-                    )
-                    inferred = _merge_inferred(
-                        inferred,
-                        _sample_schema(missed_docs, self.infer_sample_rows),
-                    )
-                snapshot_ids[r.sink_table] = snap["snapshot_id"]
-                per_sink[r.sink_table] = snap["added_rows"]
-                schemas_json[r.sink_table] = inferred.json()
+            try:
+                recs.count()
+                per_sink: dict[str, int] = {}
+                schemas_json: dict[str, str] = {}
+                for r in self.rules:
+                    part = recs.filter(F.col("sink_table") == r.sink_table)
+                    docs_only = part.select("data")
+                    if docs_only.isEmpty():
+                        continue
+                    snap, inferred = self._write_sink(txn, r, part, docs_only)
+                    per_sink[r.sink_table] = snap["added_rows"]
+                    schemas_json[r.sink_table] = inferred.json()
 
-            audit = local_frame(
-                self.spark,
-                [(request_id, batch_id, True, None,
-                  json.dumps(schemas_json), json.dumps(per_sink))],
-                AUDIT_JSON_DDL,
-            ).withColumn("started_at", F.current_timestamp())
-            commit_append("_audit_json", audit,
-                          partition_unit="month", ts_col="started_at")
-            recs.unpersist()
-            self.manifest.update(batch_id, STATE_COMPLETED, committed)
+                audit = local_frame(
+                    self.spark,
+                    [(txn.request_id, batch_id, True, None,
+                      json.dumps(schemas_json), json.dumps(per_sink))],
+                    AUDIT_JSON_DDL,
+                ).withColumn("started_at", F.timestamp_seconds(F.lit(txn.t0)))
+                txn.commit("_audit_json", lambda t: t.append(
+                    audit, partition_unit="month", ts_col="started_at"))
+            finally:
+                recs.unpersist()
             return {
                 "batch_id": batch_id, "skipped": False,
-                "per_sink_rows": per_sink, "snapshot_ids": dict(committed),
-                "elapsed_sec": time.time() - t0,
+                "per_sink_rows": per_sink, "snapshot_ids": dict(txn.committed),
+                "elapsed_sec": time.time() - txn.t0,
             }
-        except Exception:
-            for table_name, sid in reversed(attempt):
-                if self.catalog.table(table_name).rollback(sid):
-                    committed.pop(table_name, None)
-            self.manifest.update(batch_id, STATE_FAILED, committed)
-            raise
+
+    def _write_sink(self, txn: BatchTxn, r: JsonSchemaRule, part: DataFrame,
+                    docs_only: DataFrame):
+        """Infer, parse and append one sink's records; returns the
+        snapshot and the schema it was written with.
+
+        Bounded-sample inference + live-schema merge ≙ fold of
+        bqs.Infer+Merge (bigquery.go:47-62) without the full Python
+        round-trip. The coverage check (records the candidate schema
+        would LOSE data from) is OPTIMISTIC since r4: instead of a
+        dedicated pre-write scan (which measured 35% of sf1 ingest
+        wall — NOTES_r4), the residual predicate rides the WRITE job as
+        an Observation; a non-zero count (rare: the bounded sample
+        missed a key shape) undoes the sink's append, widens the schema
+        from the actually-missed records, and rewrites. Common case:
+        zero extra scans. Trade: a non-converged round costs a
+        write+rollback instead of a scan — right when misses are rare."""
+        inferred = self._infer_for_sink(r, docs_only, defer_check=True)
+        for cov_round in range(5):
+            obs = Observation(f"cov-{uuid.uuid4().hex[:8]}")
+            # Parse FIRST (own projection), then flag: the typed-null
+            # checks live on conditional branches where Spark's CSE
+            # cannot extract a repeated from_json, so the predicate must
+            # reference the materialized _parsed attribute — each doc is
+            # parsed exactly once across output + coverage.
+            staged = part.select(
+                "id", "timestamp", "data",
+                F.from_json("data", inferred).alias("_parsed"),
+            )
+            flagged = staged.select(
+                "id",
+                "timestamp",
+                "_parsed",
+                _residual_predicate(
+                    "data", inferred, nulls_stripped=True,
+                    parsed_col=F.col("_parsed"),
+                ).cast("long").alias("_cov_missed"),
+            ).observe(obs, F.sum("_cov_missed").alias("missed"))
+            out = flagged.select(
+                "id",
+                F.lit(txn.request_id).alias("ingest_id"),
+                "timestamp",
+                F.current_timestamp().alias("ingested_at"),
+                F.col("_parsed").alias("data"),
+            )
+            snap = txn.commit(r.sink_table, lambda t: t.append(
+                out, partition_unit=r.partition_unit, ts_col="timestamp"))
+            if not txn.fresh(r.sink_table):
+                break  # resumed from a prior attempt: no job ran
+            if not int(obs.get.get("missed") or 0):
+                break
+            if cov_round == 4:
+                raise RuntimeError(
+                    "json schema inference did not converge in 5 "
+                    f"rounds for sink {r.sink_table} "
+                    f"(sample_rows={self.infer_sample_rows})"
+                )
+            txn.undo(r.sink_table)
+            missed_docs = docs_only.filter(
+                _residual_predicate("data", inferred, nulls_stripped=True)
+            )
+            inferred = _merge_inferred(
+                inferred,
+                _sample_schema(missed_docs, self.infer_sample_rows),
+            )
+        return snap, inferred

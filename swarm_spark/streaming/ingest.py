@@ -96,31 +96,25 @@ def start_ingest_stream(
       'full'  — each epoch also commits the per-batch hourly aggregate
                 and an audit row (3 Spark jobs/epoch). Right for big,
                 infrequent epochs.
-      'light' — each epoch is ONE Spark job: the single-pass staged
-                write with per-sink directory adoption; counts ride
-                the job as Observations and per-epoch lineage lives in
-                the manifest entry (batch_id=epoch → snapshot ids),
-                which the stream-level audit can be derived from. The
-                hourly aggregate belongs to the INCREMENTAL streaming
-                query (hourly_counts_stream) instead of a per-epoch
-                batch shuffle — re-aggregating every epoch from
-                scratch is exactly the fixed cost a small-epoch stream
-                can't afford. routed is consumed once per epoch, so
-                the cache is skipped too.
+      'light' — each epoch is ONE Spark job on icepack: the
+                single-pass staged write with per-sink directory
+                adoption (a catalog without adoption appends each
+                sink's staged rows: one more write per sink); counts
+                ride the job as Observations and per-epoch lineage
+                lives in the manifest entry (batch_id=epoch → snapshot
+                ids), which the stream-level audit can be derived
+                from. The hourly aggregate belongs to the
+                INCREMENTAL streaming query (hourly_counts_stream)
+                instead of a per-epoch batch shuffle — re-aggregating
+                every epoch from scratch is exactly the fixed cost a
+                small-epoch stream can't afford. With no aggregate,
+                routed is read once per epoch and pipe.run caches
+                nothing.
     """
     if epoch_mode not in ("full", "light"):
         raise ValueError(f"epoch_mode={epoch_mode!r}")
     light = epoch_mode == "light"
-    # validate BEFORE mutating the caller's config — a rejected call
-    # must not leave the pipe degraded for later batch use
-    if light and pipe.config.write_mode != "single_pass":
-        raise ValueError("epoch_mode='light' requires write_mode='single_pass'")
     pipe.config.assume_ordered = True
-    if light:
-        # the stream's pipe consumes routed exactly once per epoch;
-        # this (like assume_ordered) configures the pipe for the
-        # lifetime of the stream it now drives
-        pipe.config.persist_routed = "none"
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         pipe.run(batch_df, batch_id=f"epoch-{epoch_id:08d}",

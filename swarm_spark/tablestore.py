@@ -1883,7 +1883,7 @@ class IcepackCatalog:
     pass `CASMetaStore.for_dir` to run every table's commit protocol on
     conditional-put object-store semantics."""
 
-    supports_adopt = True  # adopt_dir available → single-pass write OK
+    supports_adopt = True  # adopt_dir: a staged sink dir is adopted, not re-appended
 
     def __init__(self, root: str, store_factory=None):
         self.root = root

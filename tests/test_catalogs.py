@@ -69,7 +69,9 @@ def test_protocol_matches_icepack(spark):
 
 def test_pipeline_runs_on_spark_catalog(spark, tmp_path, request):
     """The pipeline really is catalog-agnostic: full ingest over the
-    default spark_catalog (managed parquet tables) in per_sink mode."""
+    default spark_catalog (managed parquet tables, no directory
+    adoption: each sink appends its staged rows), as a full batch and
+    as a light streaming epoch."""
     from swarm_spark.datagen import generate_transcripts
     from swarm_spark.pipeline import IngestPipeline, PipelineConfig
     from swarm_spark.presets import (
@@ -77,6 +79,7 @@ def test_pipeline_runs_on_spark_catalog(spark, tmp_path, request):
         default_schema_rules,
         default_tool_dim,
     )
+    from swarm_spark.streaming.ingest import start_ingest_stream, stream_transcripts
 
     ns = f"wh_{tmp_path.name.replace('-', '_')}"
     cat = IcebergCatalog(spark, ns, fmt="parquet")
@@ -87,7 +90,6 @@ def test_pipeline_runs_on_spark_catalog(spark, tmp_path, request):
         schema_rules=default_schema_rules(),
         warehouse=str(tmp_path / "manifest_only"),
         tool_dim=default_tool_dim(spark),
-        write_mode="per_sink",
     )
     pipe = IngestPipeline(spark, cfg, catalog=cat)
     t = generate_transcripts(spark, 400, n_convs=10, seed=3)
@@ -99,21 +101,20 @@ def test_pipeline_runs_on_spark_catalog(spark, tmp_path, request):
     res2 = pipe.run(t, batch_id="b")
     assert res2.skipped
 
-
-def test_single_pass_requires_adoption_capable_catalog(spark, tmp_path):
-    from swarm_spark.pipeline import IngestPipeline, PipelineConfig
-    from swarm_spark.presets import default_event_rules, default_schema_rules
-
-    cfg = PipelineConfig(
-        event_rules=default_event_rules(),
-        schema_rules=default_schema_rules(),
-        warehouse=str(tmp_path / "wh"),
-    )
-    cat = IcebergCatalog(spark, f"nosp_{tmp_path.name.replace('-', '_')}",
-                         fmt="parquet")
-    with pytest.raises(ValueError, match="single_pass"):
-        IngestPipeline(spark, cfg, catalog=cat)
-    spark.sql(f"DROP DATABASE IF EXISTS {cat.namespace} CASCADE")
+    # the same rows again as one light streaming epoch: every sink
+    # doubles, and the epoch commits no aggregate or audit row
+    src = str(tmp_path / "src")
+    t.write.parquet(src)
+    agg_rows = cat.table("_agg_hourly").read(spark).count()
+    q = start_ingest_stream(stream_transcripts(spark, src), pipe,
+                            str(tmp_path / "ckpt"), epoch_mode="light")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    for sink, n in res.per_sink_rows.items():
+        assert cat.table(sink).read(spark).count() == 2 * n, sink
+    assert cat.table("_agg_hourly").read(spark).count() == agg_rows
+    assert cat.table("_audit").read(spark).count() == 1
+    assert pipe.manifest.get("epoch-00000000").state == "completed"
 
 
 class TestIcebergSqlGoldens:

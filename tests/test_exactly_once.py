@@ -105,6 +105,36 @@ class TestPartialFailureRollback:
             assert res.snapshot_ids[sink] == sid
             assert p2.catalog.table(sink).read(spark).count() == res.per_sink_rows[sink]
 
+    def test_failed_attempt_releases_cache(
+        self, spark, tmp_path, transcripts, monkeypatch
+    ):
+        """A failed attempt unpersists its cached routed plan: after the
+        aggregate-raises failure Spark's cache manager holds as many
+        entries as before the run."""
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        p = make_pipeline(spark, tmp_path)
+
+        def boom(routed):
+            raise RuntimeError("agg exploded after sink commits")
+
+        monkeypatch.setattr(p, "aggregate", boom)
+        before = cache.numCachedEntries()
+        with pytest.raises(RuntimeError, match="agg exploded"):
+            p.run(transcripts, batch_id="pf3")
+        assert cache.numCachedEntries() == before
+
+    def test_audit_started_at_is_batch_start(self, spark, tmp_path, transcripts):
+        """`started_at` is the batch's start, not the time the audit
+        row was written at the end of the batch."""
+        import time
+
+        p = make_pipeline(spark, tmp_path)
+        wall0 = time.time()
+        p.run(transcripts, batch_id="b")
+        (started,) = p.catalog.table("_audit").read(spark).select(
+            F.col("started_at").cast("double")).first()
+        assert wall0 - 0.01 <= started <= wall0 + 0.5
+
     def test_count_mismatch_raises_not_assert(self):
         """The X6 written-vs-routed verify must survive python -O:
         a RuntimeError, never a bare assert."""
@@ -178,3 +208,33 @@ class TestCommitConcurrency:
         s1 = t.append(spark.createDataFrame([(1,)], "a int"))
         assert t.rollback(s1["snapshot_id"]) is True
         assert not t.exists()
+
+
+def test_batch_txn_owns_the_transaction():
+    """The ingests never drive the manifest gate or a rollback
+    themselves: acquire, record, roll back and complete go through
+    manifest.BatchTxn only."""
+    import ast
+    import pathlib
+
+    import swarm_spark
+
+    pkg = pathlib.Path(swarm_spark.__file__).resolve().parent
+    guarded = [pkg / "pipeline.py", pkg / "pipeline_json.py",
+               *sorted(pkg.glob("streaming/*.py"))]
+    assert len(guarded) >= 4
+    hits = []
+    for path in guarded:
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            attr = node.func.attr
+            owner = ast.unparse(node.func.value).lower()
+            if (attr in ("get_or_create", "rollback")
+                    or (attr == "update" and "manifest" in owner)):
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno} .{attr}(")
+    assert not hits, f"batch transaction driven outside BatchTxn: {hits}"
+    for name in ("pipeline.py", "pipeline_json.py"):
+        assert "BatchTxn(" in (pkg / name).read_text(), name

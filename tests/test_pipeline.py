@@ -32,7 +32,6 @@ def pipeline(spark, tmp_path):
         schema_rules=default_schema_rules(),
         warehouse=str(tmp_path / "wh"),
         tool_dim=default_tool_dim(spark),
-        sink_concurrency=2,
     )
     return IngestPipeline(spark, cfg)
 
@@ -193,43 +192,43 @@ def test_dead_letter_sink(spark, transcripts, tmp_path):
 
 
 def test_single_pass_equals_per_sink(spark, transcripts, tmp_path):
-    """The ONE-write-job fan-out must produce byte-identical sink
-    contents to the N-filtered-writes path, including drop_fields
-    invisibility and per-sink partition units."""
-    from swarm_spark.pipeline import IngestPipeline, PipelineConfig
+    """The ONE-write-job fan-out lands, in every sink, exactly that
+    sink's rows of the routed plan: the envelope plus the payload
+    columns its rule keeps (drop_fields invisible)."""
+    from swarm_spark.pipeline import PAYLOAD_FIELDS, IngestPipeline, PipelineConfig
     from swarm_spark.presets import (
         default_event_rules,
         default_schema_rules,
         default_tool_dim,
     )
 
-    results = {}
-    for mode in ("single_pass", "per_sink"):
-        cfg = PipelineConfig(
-            event_rules=default_event_rules(),
-            schema_rules=default_schema_rules(),
-            warehouse=str(tmp_path / f"wh_{mode}"),
-            tool_dim=default_tool_dim(spark),
-            write_mode=mode,
-        )
-        pipe = IngestPipeline(spark, cfg)
-        res = pipe.run(transcripts, batch_id="b")
-        tables = {}
-        for sink in res.per_sink_rows:
-            pdf = pipe.catalog.table(sink).read(spark).drop("ingest_id", "ingested_at").toPandas()
-            tables[sink] = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
-        results[mode] = (res, tables)
+    cfg = PipelineConfig(
+        event_rules=default_event_rules(),
+        schema_rules=default_schema_rules(),
+        warehouse=str(tmp_path / "wh"),
+        tool_dim=default_tool_dim(spark),
+    )
+    pipe = IngestPipeline(spark, cfg)
+    res = pipe.run(transcripts, batch_id="b")
+    routed = pipe.routed(transcripts)
+    rule_by_sink = {r.sink_table: r for r in cfg.schema_rules}
+    assert set(res.per_sink_rows) == set(rule_by_sink)
+    assert res.routed_rows == routed.count()
 
-    res_sp, t_sp = results["single_pass"]
-    res_ps, t_ps = results["per_sink"]
-    assert res_sp.per_sink_rows == res_ps.per_sink_rows
-    assert res_sp.routed_rows == res_ps.routed_rows
-    assert set(t_sp) == set(t_ps)
-    import pandas as pd
+    def frame(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
-    for sink in t_sp:
-        assert list(t_sp[sink].columns) == list(t_ps[sink].columns), sink
-        pd.testing.assert_frame_equal(t_sp[sink], t_ps[sink], check_dtype=False)
+    for sink, r in rule_by_sink.items():
+        keep = [c for c in PAYLOAD_FIELDS
+                if c in routed.columns and c not in set(r.drop_fields)]
+        exp = frame(routed.filter(F.col("sink_table") == sink)
+                    .select("id", "timestamp", *keep))
+        got = frame(pipe.catalog.table(sink).read(spark)
+                    .drop("ingest_id", "ingested_at"))
+        assert res.per_sink_rows[sink] == len(exp), sink
+        assert list(got.columns) == list(exp.columns), sink
+        pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
 def test_single_pass_drop_fields_invisible_and_partitioned(spark, transcripts, tmp_path):
@@ -248,7 +247,6 @@ def test_single_pass_drop_fields_invisible_and_partitioned(spark, transcripts, t
         warehouse=str(tmp_path / "wh"),
         tool_dim=default_tool_dim(spark),
     )
-    assert cfg.write_mode == "single_pass"  # the default
     pipe = IngestPipeline(spark, cfg)
     pipe.run(transcripts, batch_id="b")
     dropped = {r.sink_table: set(r.drop_fields)

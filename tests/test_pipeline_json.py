@@ -335,6 +335,89 @@ class TestJsonPartialFailure:
         assert ing.catalog.table("logs").read(spark).count() == 1
 
 
+    def test_retry_skips_unrollbackable_commits(self, spark, tmp_path, monkeypatch):
+        """When rollback is impossible (another batch committed on
+        top), the sink's snapshot id stays in the manifest and the
+        retry SKIPS that sink instead of re-appending."""
+        from swarm_spark.tablestore import IcepackTable
+
+        _write(tmp_path / "a.log",
+               json.dumps({"log_id": "x", "event_time": 1.0}))
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        orig_append = IcepackTable.append
+
+        def boom(self, df, **kw):
+            if self.name == "_audit_json":
+                raise RuntimeError("audit exploded")
+            return orig_append(self, df, **kw)
+
+        monkeypatch.setattr(IcepackTable, "append", boom)
+        monkeypatch.setattr(IcepackTable, "rollback", lambda self, sid: False)
+        with pytest.raises(RuntimeError, match="audit exploded"):
+            ing.run(str(tmp_path / "a.log"), batch_id="pf2")
+        monkeypatch.undo()
+
+        st = ing.manifest.get("pf2")
+        assert st.state == "failed"
+        kept = dict(st.snapshot_ids)
+        assert set(kept) == {"logs"}  # sink commit recorded for resume-skip
+
+        appended = []
+
+        def counting(self, df, **kw):
+            appended.append(self.name)
+            return orig_append(self, df, **kw)
+
+        monkeypatch.setattr(IcepackTable, "append", counting)
+        ing2 = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        res = ing2.run(str(tmp_path / "a.log"), batch_id="pf2")
+        assert not res["skipped"]
+        assert res["snapshot_ids"]["logs"] == kept["logs"]
+        assert appended == ["_audit_json"]  # the sink was NOT re-appended
+        t = ing2.catalog.table("logs")
+        assert len(t.snapshots()) == 1
+        assert t.read(spark).count() == res["per_sink_rows"]["logs"] == 1
+        assert ing2.manifest.get("pf2").state == "completed"
+
+    def test_failed_attempt_releases_cache(self, spark, tmp_path, monkeypatch):
+        """A failed attempt unpersists its cached records: after the
+        `_audit_json`-raises failure Spark's cache manager holds as
+        many entries as before the run."""
+        from swarm_spark.tablestore import IcepackTable
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        _write(tmp_path / "a.log",
+               json.dumps({"log_id": "x", "event_time": 1.0}))
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        orig_append = IcepackTable.append
+
+        def boom(self, df, **kw):
+            if self.name == "_audit_json":
+                raise RuntimeError("audit exploded")
+            return orig_append(self, df, **kw)
+
+        monkeypatch.setattr(IcepackTable, "append", boom)
+        before = cache.numCachedEntries()
+        with pytest.raises(RuntimeError, match="audit exploded"):
+            ing.run(str(tmp_path / "a.log"), batch_id="pf3")
+        assert cache.numCachedEntries() == before
+
+    def test_audit_started_at_is_batch_start(self, spark, tmp_path):
+        """`started_at` is the batch's start, not the time the audit
+        row was written at the end of the batch."""
+        import time
+
+        from pyspark.sql import functions as F
+
+        _write(tmp_path / "a.log", LOG_LINES)
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        wall0 = time.time()
+        ing.run(str(tmp_path / "a.log"), batch_id="b")
+        (started,) = ing.catalog.table("_audit_json").read(spark).select(
+            F.col("started_at").cast("double")).first()
+        assert wall0 - 0.01 <= started <= wall0 + 0.5
+
+
 class TestInferenceConvergence:
     def test_many_key_cohorts_converge(self, spark, tmp_path):
         """5 disjoint top-level key cohorts with sample_rows=1: the

@@ -165,9 +165,12 @@ def test_catalog_append_inherits_partition_and_aligns(spark, tmp_path):
 
 
 # ---------------------------------------------------------------- 4 --
-def test_drop_fields_never_nulls_envelope(spark, tmp_path):
+def test_drop_fields_never_nulls_envelope(spark, tmp_path, request):
     """A rule listing an envelope name in drop_fields must not null
-    the envelope in single_pass mode; both write modes stay equal."""
+    the envelope in the staged write; the icepack run (directory
+    adoption) and a spark_catalog parquet run (append of the staged
+    rows) land the same sink contents."""
+    from swarm_spark.catalogs import IcebergCatalog
     from swarm_spark.datagen import generate_transcripts
     from swarm_spark.pipeline import IngestPipeline, PipelineConfig
     from swarm_spark.presets import (
@@ -181,26 +184,38 @@ def test_drop_fields_never_nulls_envelope(spark, tmp_path):
         dataclasses.replace(r, drop_fields=("text", "timestamp", "id"))
         for r in default_schema_rules()
     ]
+    ns = f"r3drop_{tmp_path.name.replace('-', '_')}"
+    request.addfinalizer(
+        lambda: spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE"))
+    catalogs = {"icepack": None,
+                "spark_catalog": IcebergCatalog(spark, ns, fmt="parquet")}
 
     outs = {}
-    for mode in ("single_pass", "per_sink"):
+    for name, cat in catalogs.items():
         cfg = PipelineConfig(
             event_rules=default_event_rules(),
             schema_rules=rules,
-            warehouse=str(tmp_path / f"wh_{mode}"),
+            warehouse=str(tmp_path / f"wh_{name}"),
             tool_dim=default_tool_dim(spark),
-            write_mode=mode,
         )
-        pipe = IngestPipeline(spark, cfg)
-        pipe.run(transcripts, batch_id=f"b-{mode}")
+        pipe = IngestPipeline(spark, cfg, catalog=cat)
+        res = pipe.run(transcripts, batch_id=f"b-{name}")
         sink = pipe.catalog.table("sink_tools").read(spark)
         assert sink.filter(F.col("timestamp").isNull()).count() == 0
         assert sink.filter(F.col("id").isNull()).count() == 0
         assert "text" not in sink.columns  # payload drop still applies
-        outs[mode] = sink.select(
+        outs[name] = sink.select(
             "id", "timestamp", "conv_id", "turn_idx"
         ).orderBy("conv_id", "turn_idx").collect()
-    assert outs["single_pass"] == outs["per_sink"]
+        # every sink, every column but the per-run ingest stamps (and
+        # the V1 table's storage partition column)
+        for s in res.per_sink_rows:
+            df = pipe.catalog.table(s).read(spark).drop(
+                "ingest_id", "ingested_at", "_p")
+            outs[(name, s)] = (df.columns, df.orderBy(*df.columns).collect())
+    assert outs["icepack"] == outs["spark_catalog"]
+    for s in res.per_sink_rows:
+        assert outs[("icepack", s)] == outs[("spark_catalog", s)], s
 
 
 # -------------------------------------------- GC / rewrite races ----
@@ -586,38 +601,18 @@ def test_guarded_metadata_never_leaks_masked_columns(spark, tmp_path):
 
 
 def test_footer_rows_accepts_file_uri(spark, tmp_path):
-    from swarm_spark.pipeline import _parquet_footer_rows
+    from swarm_spark.filestats import collect_dir_stats
+
+    def footer_rows(path):
+        st = collect_dir_stats(path)
+        return None if st is None else sum(f["rows"] for f in st["files"].values())
 
     p = str(tmp_path / "t")
     spark.createDataFrame([(i,) for i in range(7)], "a bigint").write.parquet(p)
-    assert _parquet_footer_rows(p) == 7
-    assert _parquet_footer_rows("file:" + p) == 7
-    assert _parquet_footer_rows("file://" + p) == 7
-    assert _parquet_footer_rows("s3://bucket/x") is None
-
-
-def test_light_mode_rejection_leaves_config_untouched(spark, tmp_path):
-    from swarm_spark.datagen import generate_transcripts
-    from swarm_spark.pipeline import IngestPipeline, PipelineConfig
-    from swarm_spark.presets import (
-        default_event_rules,
-        default_schema_rules,
-        default_tool_dim,
-    )
-    from swarm_spark.streaming.ingest import start_ingest_stream
-
-    cfg = PipelineConfig(
-        event_rules=default_event_rules(),
-        schema_rules=default_schema_rules(),
-        warehouse=str(tmp_path / "wh"),
-        tool_dim=default_tool_dim(spark),
-        write_mode="per_sink",
-    )
-    pipe = IngestPipeline(spark, cfg)
-    stream = generate_transcripts(spark, 10, n_convs=2, seed=1)  # placeholder df
-    with pytest.raises(ValueError, match="single_pass"):
-        start_ingest_stream(stream, pipe, str(tmp_path / "ck"), epoch_mode="light")
-    assert cfg.persist_routed == "memory_and_disk"  # not degraded
+    assert footer_rows(p) == 7
+    assert footer_rows("file:" + p) == 7
+    assert footer_rows("file://" + p) == 7
+    assert footer_rows("s3://bucket/x") is None
 
 
 def test_infer_probe_path_detects_conflicts(spark, monkeypatch):
@@ -685,8 +680,9 @@ def test_infer_probe_detects_struct_vs_scalar(spark, monkeypatch):
 
 
 def test_footer_rows_path_with_special_chars(spark, tmp_path):
-    from swarm_spark.pipeline import _parquet_footer_rows
+    from swarm_spark.filestats import collect_dir_stats
 
     p = str(tmp_path / "wh#prod")
     spark.createDataFrame([(1,), (2,)], "a bigint").write.parquet(p)
-    assert _parquet_footer_rows(p) == 2  # '#' not treated as a fragment
+    st = collect_dir_stats(p)
+    assert sum(f["rows"] for f in st["files"].values()) == 2  # '#' not a fragment

@@ -108,7 +108,6 @@ def stream_setup(spark, tmp_path):
         schema_rules=default_schema_rules(),
         warehouse=str(tmp_path / "wh"),
         tool_dim=default_tool_dim(spark),
-        sink_concurrency=2,
     )
     return src, IngestPipeline(spark, cfg), t
 
@@ -219,7 +218,6 @@ class TestLightEpochs:
                 warehouse=str(tmp_path / f"wh_{tag}"),
                 tool_dim=default_tool_dim(spark),
                 assume_ordered=True,
-                persist_routed="none",
             )
             pipe = IngestPipeline(spark, cfg)
             sc.setJobGroup(f"jg-{tag}", tag)

@@ -88,16 +88,10 @@ def profile_ingest(spark):
     t_obs = t.observe(obs_in, F.count(F.lit(1)).alias("n"))
     routed2 = p.routed(t_obs, ingest_id=rid).persist(StorageLevel.MEMORY_AND_DISK)
     tm.lap("plan build")
-    committed = {}
+    from swarm_spark.manifest import BatchTxn
 
-    def commit_adopt(name, ddir, n, schema, unit=""):
-        tt = p.catalog.table(name)
-        snap = tt.adopt_dir(ddir, n, schema, unit, "timestamp")
-        committed[name] = snap["snapshot_id"]
-        return snap
-
-    out = p._single_pass_write(routed2, rid, sinks, rule_by_sink, "",
-                               commit_adopt, obs_in)
+    with BatchTxn(p.manifest, p.catalog, "prof-split", rid) as txn:
+        out = p._single_pass_write(routed2, txn, sinks, rule_by_sink, "", obs_in)
     tm.lap("single_pass_write (write+verify+adopts)")
     agg = p.aggregate(routed2)
     p.catalog.table("_agg_hourly").append(
@@ -106,7 +100,7 @@ def profile_ingest(spark):
     tm.lap("aggregate + append")
     routed2.unpersist()
     tm.total()
-    print(f"  (routed rows {out[2]}, input {out[3]})")
+    print(f"  (routed rows {out[1]}, input {out[2]})")
 
 
 def profile_ann(spark):
