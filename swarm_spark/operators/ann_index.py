@@ -36,11 +36,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swarm_spark.operators.kernels import cosine_probe
 from swarm_spark.operators.similarity import (
+    _quantized_topk,
+    cosine_topk,
     ivf_assign,
     ivf_centroids,
-    ivf_topk,
-    ivf_topk_quantized,
 )
 
 __all__ = ["build_ann_index", "extend_ann_index", "ann_topk_from_index"]
@@ -161,19 +162,18 @@ def ann_topk_from_index(
 
     snap = table.current_snapshot()
     cents, id_col, vec_col = _decode_meta(snap)
-    q = np.array(query_vec, dtype=np.float64)
     if mode == "adc":
         # rank metric is squared L2 (ADC) — probe lists by the SAME
         # metric, or the coarse step and the fine step disagree and
         # recall craters on non-unit-norm embeddings. (Full probe
         # n_probe == n_lists is metric-independent and exact vs
         # pq_topk — the hash-verified configuration.)
+        q = np.array(query_vec, dtype=np.float64)
         probe = np.argsort(((cents - q) ** 2).sum(axis=1))[:n_probe].tolist()
     else:
-        qn = q / np.linalg.norm(q)
-        cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        probe = np.argsort(-(cn @ qn))[:n_probe].tolist()
-    # the probe IS partition/file pruning — only the probed lists' files scan
+        probe = cosine_probe(cents, query_vec, n_probe)
+    # the probe IS partition/file pruning — only the probed lists' files
+    # scan, and the read keeps only the probed lists' rows
     assigned = table.read(spark, prune=[("_list", "in", [int(p) for p in probe])])
     if mode == "adc":
         if not snap.get("ann_pq_books"):
@@ -185,6 +185,6 @@ def ann_topk_from_index(
         return pq_topk(codes, books, query_vec, k=k, id_col=id_col)
     if mode != "exact":
         raise ValueError(f"mode must be exact|adc, got {mode!r}")
-    fn = ivf_topk_quantized if quantized else ivf_topk
-    return fn(assigned, cents, query_vec, k=k, n_probe=n_probe,
-              vec_col=vec_col, id_col=id_col)
+    if quantized:
+        return _quantized_topk(assigned, query_vec, k, vec_col, id_col)
+    return cosine_topk(assigned, query_vec, k, vec_col, id_col)

@@ -3,71 +3,45 @@ DataFrames, ENGINE-EXACT.
 
 The repo-wide oracle discipline applied to an iterative ML kernel:
 every quantity that crosses an engine boundary is an integer.
-Embeddings are quantized once (q_i = floor(emb_i · 1e6) on the
-float→double-exact cast), distances are integer sums of squares
-(order-free), centroid updates are floor(mean) where the mean is ONE
-correctly-rounded double division (identical in every IEEE engine),
-and argmin ties break on the lowest centroid id. Given the same
-deterministic init (the k lowest-id vectors), the assignment after
-any fixed iteration count is bit-identical across engines,
+Embeddings are quantized once (kernels.quantize: q_i = floor(emb_i ·
+1e6) on the float→double-exact cast), distances are integer sums of
+squares (order-free), centroid updates are floor(mean) where the mean
+is ONE correctly-rounded double division (identical in every IEEE
+engine), and argmin ties break on the lowest centroid id. Given the
+same deterministic init (the k lowest-id vectors), the assignment
+after any fixed iteration count is bit-identical across engines,
 partitionings, and retries — pinned by the `kmeans` oracle, which
-unrolls the same iterations as DuckDB CTEs.
+unrolls the same iterations as DuckDB CTEs. The vector folds live in
+kernels.py; this module holds the one Lloyd loop, which also fits the
+per-subspace codebooks of product quantization (similarity.pq_train).
 
 Scale shape (100 TB): the vector relation is NEVER shuffled. Each
-iteration is (a) a narrow assignment projection — k integer
-fold-expressions over the array column, whole-stage codegen'd — and
-(b) a centroid update that shuffles only k·d partial sums per
-partition (posexplode → groupBy(cluster, dim) with map-side combine).
-Centroids live on the driver between iterations (k·d ints,
-config-sized — the same contract as similarity.py's IVF centroids).
-Empty clusters keep their previous centroid (documented; k never
-shrinks mid-run).
+iteration is (a) a narrow assignment projection — per subspace, k
+integer folds over ONE codebook literal — and (b) a centroid update
+that explodes one (subspace, cluster, slice) struct per row and
+subspace and groups by (subspace, cluster), map-side combined, so the
+shuffle and the collect carry at most m·k rows of sub sums. Centroids
+live on the driver between iterations (k·d ints, config-sized — the
+same contract as similarity.py's IVF centroids). Empty clusters keep
+their previous centroid (documented; k never shrinks mid-run).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .kernels import QUANT  # noqa: F401 (public name, kept importable here)
+from .kernels import argmin, lit, quantize, sqdists, subspace_codes
 from .util import spread
 
 __all__ = ["kmeans", "fit_centroids", "fit_subspace_centroids"]
 
-QUANT = 1_000_000.0
-
 
 def _quantized(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * F.lit(QUANT)).cast("bigint"),
-        ).alias("q"),
-    )
-
-
-def _lit2d(centroids: list[list[int]]) -> Column:
-    """All centroids as ONE array<array<bigint>> literal. A k-means
-    plan used to carry k·d separate Literal nodes (k=8, d=64 → 512
-    nodes, duplicated by array_min/array_position → thousands);
-    Catalyst analysis of that tree dominated the job on small data
-    (measured 1.2 s → 0.18 s per assignment job after collapsing it to
-    a single literal — identical integer results)."""
-    return F.lit([[int(v) for v in c] for c in centroids]).cast(
-        "array<array<bigint>>")
-
-
-def _dists_expr(q: Column, centroids: list[list[int]]) -> Column:
-    """array of integer squared L2 distances from `q` to every
-    centroid — a runtime fold over ONE 2-D literal (see _lit2d)."""
-    return F.transform(
-        _lit2d(centroids),
-        lambda c: F.aggregate(
-            F.zip_with(q, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ),
-    )
+    return df.select(F.col(id_col), quantize(F.col(vec_col)).alias("q"))
 
 
 def kmeans(
@@ -89,7 +63,12 @@ def kmeans(
         raise ValueError("k >= 1 and iterations >= 0 required")
     vecs = _quantized(spread(df), vec_col, id_col)
     centroids = fit_centroids(vecs, k, iterations, id_col=id_col)
-    return _assigned(vecs, centroids, id_col).select(id_col, "cluster", "dist")
+    dists = sqdists(F.col("q"), lit(centroids))
+    return vecs.select(
+        F.col(id_col),
+        argmin(dists).alias("cluster"),
+        F.array_min(dists).alias("dist"),
+    )
 
 
 def cluster_expr(q: Column, centroids: list[list[int]]) -> Column:
@@ -97,67 +76,17 @@ def cluster_expr(q: Column, centroids: list[list[int]]) -> Column:
     the assignment as a pure Column expression (lowest-index tiebreak),
     reusable inline wherever the assignment is needed without
     persisting an assignment table."""
-    dists = _dists_expr(q, centroids)
-    return F.array_position(dists, F.array_min(dists)) - 1
-
-
-def _assigned(vs: DataFrame, centroids: list[list[int]],
-              id_col: str) -> DataFrame:
-    dists = _dists_expr(F.col("q"), centroids)
-    return vs.select(
-        F.col(id_col),
-        "q",
-        # first index of the minimum = lowest centroid id tiebreak
-        (F.array_position(dists, F.array_min(dists)) - 1).alias("cluster"),
-        F.array_min(dists).alias("dist"),
-    )
+    return argmin(sqdists(q, lit(centroids)))
 
 
 def fit_centroids(vecs: DataFrame, k: int, iterations: int,
                   id_col: str = "vec_id") -> list[list[int]]:
     """Lloyd's rounds over an already-quantized (id, q) relation;
-    returns the final centroids (k lists of quantized ints). Shared by
-    kmeans() and product quantization (similarity.pq_train, which fits
-    one codebook per subvector slice). Same determinism contract:
-    lowest-id init, floor-mean updates, empty clusters keep their
-    previous centroid."""
-    import math
-
-    vecs = spread(vecs)
-    init = vecs.orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"k={k} but only {len(init)} vectors")
-    centroids: list[list[int]] = [list(r["q"]) for r in init]
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        # Update as ONE wide aggregation — groupBy(cluster) with d
-        # per-dimension long sums (map-side combined to k rows per
-        # partition, exactly like the posexplode/groupBy(cluster, i)
-        # form it replaces, but without the explode: an expression
-        # referenced past a generator is re-evaluated once per OUTPUT
-        # row, so the old shape paid the k-centroid argmin d times per
-        # vector). floor(sum/n) stays the same correctly-rounded
-        # double division (sums < 2^53, so float(s)/float(n) here is
-        # bit-equal to the SQL cast-to-double division it replaces).
-        upd = (
-            vecs.groupBy(
-                cluster_expr(F.col("q"), centroids).alias("cluster"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.element_at("q", i + 1)).alias(f"s{i}")
-                  for i in range(dim)],
-            )
-            .collect()
-        )
-        nxt = [list(c) for c in centroids]  # empty cluster keeps old centroid
-        for r in upd:
-            c, n = int(r["cluster"]), float(r["n"])
-            nxt[c] = [int(math.floor(float(r[f"s{i}"]) / n))
-                      for i in range(dim)]
-        centroids = nxt
-        if dim and any(len(c) != dim for c in centroids):  # pragma: no cover
-            raise RuntimeError("ragged embedding arrays")
-    return centroids
+    returns the final centroids (k lists of quantized ints): the m=1
+    case of fit_subspace_centroids, one subspace as wide as q. Same
+    determinism contract: lowest-id init, floor-mean updates, empty
+    clusters keep their previous centroid."""
+    return _lloyd(vecs, k, iterations, id_col, 1)[0]
 
 
 def fit_subspace_centroids(vecs: DataFrame, k: int, iterations: int,
@@ -174,65 +103,51 @@ def fit_subspace_centroids(vecs: DataFrame, k: int, iterations: int,
     same double division, empty clusters keep their previous
     centroid — so the returned codebooks are bit-identical to the
     unfused path (pinned by pytest)."""
-    import math
+    return _lloyd(vecs, k, iterations, id_col, m, sub)
 
+
+def _lloyd(vecs: DataFrame, k: int, iterations: int, id_col: str,
+           m: int, sub: int | None = None) -> list[list[list[int]]]:
+    """The Lloyd loop: init, assign+update rounds, floor-mean. `sub`
+    None is one subspace as wide as the init vectors."""
     vecs = spread(vecs)
     init = vecs.orderBy(id_col).limit(k).collect()
     if len(init) < k:
         raise ValueError(f"k={k} but only {len(init)} vectors")
-    books: list[list[list[int]]] = [
-        [list(r["q"])[s * sub:(s + 1) * sub] for r in init] for s in range(m)
-    ]
-    dim = m * sub
+    sub = sub or len(init[0]["q"])
+    books = [[list(r["q"])[s * sub:(s + 1) * sub] for r in init]
+             for s in range(m)]
+    q = F.col("q")
     for _ in range(iterations):
-        lit3d = F.lit([[list(map(int, c)) for c in cb] for cb in books]).cast(
-            "array<array<array<bigint>>>")
-
-        def sub_cluster(s: Column) -> Column:
-            sl = F.slice(F.col("q"), s * sub + 1, F.lit(sub))
-            dists = F.transform(
-                F.element_at(lit3d, (s + 1).cast("int")),
-                lambda c: F.aggregate(
-                    F.zip_with(sl, c, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                ),
-            )
-            return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-        # ONE wide aggregation keyed on the per-subspace assignment
-        # vector (array<int> group key): the m argmins run once per
-        # row, the shuffle carries ≤ distinct-combo rows × (d sums +
-        # count) per partition (map-side combined — same scale shape
-        # as the per-(cluster, dim) partial agg it replaces, without
-        # the generator that re-evaluated the assignment per exploded
-        # value). Per-(s, cluster) totals are recombined driver-side
-        # with exact integer adds; floor-mean uses the identical
-        # correctly-rounded double division (sums < 2^53).
-        clusters = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), sub_cluster)
+        # ONE aggregation keyed on (subspace, cluster): the m argmins
+        # run once per row, in the generator's input (an expression
+        # referenced PAST a generator is re-evaluated once per output
+        # row, so the codes must not be recomputed after the explode),
+        # and each row contributes one (s, cluster, slice) struct per
+        # subspace. The shuffle and the collect carry at most m·k rows
+        # of (count + sub sums) — not one row per distinct m-wide code
+        # combination. floor(sum/n) is ONE correctly-rounded double
+        # division (sums < 2^53, so float(s)/float(n) here is bit-equal
+        # to the SQL cast-to-double division of the oracle).
+        parts = F.transform(
+            subspace_codes(q, books),
+            lambda c, s: F.struct(
+                s.alias("s"), c.alias("c"),
+                F.slice(q, s * sub + 1, F.lit(sub)).alias("v")))
         upd = (
-            vecs.groupBy(clusters.alias("_cl"))
+            vecs.select(F.explode(parts).alias("p"))
+            .groupBy("p.s", "p.c")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.element_at("q", i + 1)).alias(f"s{i}")
-                  for i in range(dim)],
+                *[F.sum(F.element_at("p.v", i + 1)).alias(f"s{i}")
+                  for i in range(sub)],
             )
             .collect()
         )
-        totals: dict[tuple[int, int], list[int]] = {}
-        counts: dict[tuple[int, int], int] = {}
+        nxt = [[list(c) for c in cb] for cb in books]  # empty cluster keeps old centroid
         for r in upd:
-            cl, n = list(r["_cl"]), int(r["n"])
-            sums = [int(r[f"s{i}"]) for i in range(dim)]
-            for s in range(m):
-                key = (s, int(cl[s]))
-                acc = totals.setdefault(key, [0] * sub)
-                for i in range(sub):
-                    acc[i] += sums[s * sub + i]
-                counts[key] = counts.get(key, 0) + n
-        nxt = [[list(c) for c in cb] for cb in books]
-        for (s, c), acc in totals.items():
-            n = float(counts[(s, c)])
-            nxt[s][c] = [int(math.floor(float(v) / n)) for v in acc]
+            n = float(r["n"])
+            nxt[r["s"]][r["c"]] = [int(math.floor(float(r[f"s{i}"]) / n))
+                                   for i in range(sub)]
         books = nxt
     return books

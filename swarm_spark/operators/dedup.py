@@ -792,8 +792,8 @@ def semantic_dedup_keep(
     Deterministic and cross-engine exact end to end: clustering is the
     integer-quantized kmeans (clustering.py — bit-identical across
     engines/partitionings), and similarity is the signed-squared-cosine
-    integer score from similarity.py (score_q = sign·(1e6·<qa,qb>²)
-    div (|qa|²|qb|²) on round(v·scale) vectors), so the keep set is
+    integer score kernels.score_q (sign·(1e6·<qa,qb>²) div
+    (|qa|²|qb|²) on round(v·scale) vectors), so the keep set is
     hash-verifiable against a SQL oracle. Keep rule: lowest id in each
     pairwise-similar relation survives (same keep-first convention as
     minhash_dedup_keep).
@@ -806,6 +806,7 @@ def semantic_dedup_keep(
     Returns (id_col, cluster) for survivors."""
     from swarm_spark.operators.clustering import (
         _quantized, cluster_expr, fit_centroids)
+    from swarm_spark.operators.kernels import quantize, score_q
     from swarm_spark.operators.similarity import dot_q, quantize_vec
     from swarm_spark.operators.util import spread
 
@@ -824,15 +825,11 @@ def semantic_dedup_keep(
     centroids = fit_centroids(
         _quantized(base, vec_col, id_col), k, iterations, id_col=id_col)
     qv = quantize_vec(F.col(vec_col), scale)
-    quant = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(1_000_000.0)).cast("bigint"),
-    )
     vecs = base.select(
         F.col(id_col).alias("_id"),
         qv.alias("_q"),
         dot_q(qv, qv).alias("_n2"),
-        cluster_expr(quant, centroids).alias("cluster"),
+        cluster_expr(quantize(F.col(vec_col)), centroids).alias("cluster"),
     )
     sizes = vecs.groupBy("cluster").count().agg(
         F.max("count").alias("mx")).first()
@@ -851,11 +848,7 @@ def semantic_dedup_keep(
             dot_q(F.col("a._q"), F.col("b._q")).alias("_d"),
             (F.col("a._n2") * F.col("b._n2")).alias("_nn"),
         )
-        .select(
-            "_id",
-            (F.when(F.col("_d") >= 0, 1).otherwise(-1)
-             * F.expr("(1000000 * _d * _d) div _nn")).alias("_sq"),
-        )
+        .select("_id", score_q(F.col("_d"), F.col("_nn")).alias("_sq"))
         .filter(F.col("_sq") >= threshold_q)
         .select("_id")
         .distinct()

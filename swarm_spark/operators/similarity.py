@@ -13,7 +13,9 @@
 
 Hyperplanes/centroids are derived deterministically (seeded hashes /
 deterministic sampling), so results are reproducible with no stored
-model artifacts.
+model artifacts. The vector folds (dot products, integer distances,
+argmins, the quantized score, ADC lookups) and the literal builder
+are kernels.py's; this module composes them into queries.
 """
 
 from __future__ import annotations
@@ -26,21 +28,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from swarm_spark.operators import kernels
+
 
 # ---------------------------------------------------------------------------
 # vector math as Column expressions (JVM-side)
 # ---------------------------------------------------------------------------
 
 def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return kernels.dot(a, b, F.lit(0.0))
 
 
 def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+    return F.sqrt(dot(a, a))
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -50,26 +50,17 @@ def cosine(a: Column, b: Column) -> Column:
 # -- integer-quantized scoring: cross-engine EXACT ----------------------
 #
 # Floats differ in the last bits across engines (summation order), so
-# hash-verified oracles quantize the VECTORS to integers first and
-# compare an integer score: with q(v) = round(v*scale) as BIGINT,
-#
-#   score_q = sign(<qa,qb>) * (1_000_000 * <qa,qb>^2) div (|qa|^2 |qb|^2)
-#
-# is monotone in |cosine| (signed), computed in exact 64-bit integer
-# arithmetic in BOTH Spark and DuckDB. Bounds (|x|<=1, dim<=64,
-# scale=128): dot <= 64*128^2 ~ 2^20, 1e6*dot^2 ~ 2^60 < 2^63. The
-# float paths above remain the production scorers.
+# hash-verified oracles quantize the VECTORS to integers first
+# (q(v) = round(v*scale) as BIGINT) and compare kernels.score_q, the
+# signed squared cosine in exact 64-bit integer arithmetic. The float
+# paths above remain the production scorers.
 
 def quantize_vec(a: Column, scale: int = 128) -> Column:
     return F.transform(a, lambda x: F.round(x.cast("double") * scale).cast("long"))
 
 
 def dot_q(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    return kernels.dot(a, b, F.lit(0).cast("long"))
 
 
 def cosine_topk_quantized(
@@ -90,20 +81,22 @@ def cosine_topk_quantized(
         df.filter(F.col(id_col) == query_id)
         .select(quantize_vec(F.col(vec_col), scale).alias("_qv"))
     )
+    v = quantize_vec(F.col(vec_col), scale)
     out = spread(df).crossJoin(F.broadcast(qv)).select(
         F.col(id_col),
-        dot_q(quantize_vec(F.col(vec_col), scale), F.col("_qv")).alias("_d"),
-        dot_q(quantize_vec(F.col(vec_col), scale),
-              quantize_vec(F.col(vec_col), scale)).alias("_na"),
+        dot_q(v, F.col("_qv")).alias("_d"),
+        dot_q(v, v).alias("_na"),
         dot_q(F.col("_qv"), F.col("_qv")).alias("_nq"),
     )
+    return _top_score_q(out, k, id_col)
+
+
+def _top_score_q(out: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Top-k of (id_col, _d, _na, _nq) rows by kernels.score_q, ties
+    on id."""
     return (
-        out.withColumn(
-            "score_q",
-            F.expr("CASE WHEN _d >= 0 THEN 1 ELSE -1 END"
-                   " * ((1000000 * _d * _d) div (_na * _nq))"),
-        )
-        .select(id_col, "score_q")
+        out.select(F.col(id_col), kernels.score_q(
+            F.col("_d"), F.col("_na") * F.col("_nq")).alias("score_q"))
         .orderBy(F.desc("score_q"), F.col(id_col))
         .limit(k)
     )
@@ -130,17 +123,9 @@ def rhp_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 
 def rhp_signature(vec: Column, dim: int, n_planes: int, seed: int = 42) -> Column:
     """Random-hyperplane signature as a LONG bucket id: bit p = sign of
-    <vec, plane_p>. Plane coefficients are plan-time literals; the dot
-    products are zip_with/aggregate — all codegen'd."""
-    planes = rhp_planes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for p, coeffs in enumerate(planes):
-        plane_arr = F.array(*[F.lit(float(c)) for c in coeffs])
-        bit = F.when(dot(vec, plane_arr) >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
+    <vec, plane_p>. The planes are ONE plan-time 2-D literal, folded
+    per plane (kernels.sign_bits)."""
+    return kernels.sign_bits(vec, rhp_planes(dim, n_planes, seed))
 
 
 # ---------------------------------------------------------------------------
@@ -157,7 +142,7 @@ def cosine_topk(
     """Exact top-k by cosine similarity to a literal query vector.
     The plan is Scan → Project(cos) → TakeOrderedAndProject(k):
     no shuffle of vectors, only k rows cross partitions."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = kernels.lit(query_vec, "double")
     return (
         df.select(F.col(id_col), cosine(F.col(vec_col), q).alias("cos"))
         .orderBy(F.desc("cos"), F.col(id_col))
@@ -213,7 +198,7 @@ def ann_lsh_topk(
     for p, coeffs in enumerate(planes):
         if sum(c * x for c, x in zip(coeffs, query_vec)) >= 0:
             q_sig |= 1 << p
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = kernels.lit(query_vec, "double")
     return (
         df.withColumn("_sig", sig)
         .filter(F.bit_count(F.col("_sig").bitwiseXOR(F.lit(q_sig).cast("long"))) <= max_hamming)
@@ -270,17 +255,9 @@ def ivf_topk(
     At scale the assigned table is written partitioned by _list, so
     the probe is partition pruning — a fraction n_probe/n_centroids
     of the corpus is scanned."""
-    qn = np.array(query_vec, dtype=np.float64)
-    qn = qn / np.linalg.norm(qn)
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    probe = np.argsort(-(cn @ qn))[:n_probe].tolist()
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        df_assigned.filter(F.col("_list").isin(probe))
-        .select(F.col(id_col), cosine(F.col(vec_col), q).alias("cos"))
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
+    probe = kernels.cosine_probe(centroids, query_vec, n_probe)
+    return cosine_topk(df_assigned.filter(F.col("_list").isin(probe)),
+                       query_vec, k, vec_col, id_col)
 
 
 def ivf_topk_quantized(
@@ -298,10 +275,14 @@ def ivf_topk_quantized(
     result is EXACTLY the brute-force quantized top-k — the
     hash-verifiable configuration; smaller n_probe is the approximate
     production path (recall pinned by pytest)."""
-    qn = np.array(query_vec, dtype=np.float64)
-    qn = qn / np.linalg.norm(qn)
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    probe = np.argsort(-(cn @ qn))[:n_probe].tolist()
+    probe = kernels.cosine_probe(centroids, query_vec, n_probe)
+    return _quantized_topk(df_assigned.filter(F.col("_list").isin(probe)),
+                           query_vec, k, vec_col, id_col, scale)
+
+
+def _quantized_topk(df: DataFrame, query_vec: list[float], k: int,
+                    vec_col: str, id_col: str, scale: int = 128) -> DataFrame:
+    """Top-k of `df` by the quantized score against a literal query."""
 
     def _q(x: float) -> int:
         # HALF_UP away from zero — Spark's round() and DuckDB's round(),
@@ -310,25 +291,15 @@ def ivf_topk_quantized(
         return int(math.floor(ax + 0.5)) * (1 if x >= 0 else -1)
 
     qq = [_q(x) for x in query_vec]
-    qv = F.array(*[F.lit(v).cast("long") for v in qq])
     nq = int(sum(v * v for v in qq))
     v = quantize_vec(F.col(vec_col), scale)
-    out = df_assigned.filter(F.col("_list").isin(probe)).select(
+    out = df.select(
         F.col(id_col),
-        dot_q(v, qv).alias("_d"),
+        dot_q(v, kernels.lit(qq)).alias("_d"),
         dot_q(v, v).alias("_na"),
         F.lit(nq).cast("long").alias("_nq"),
     )
-    return (
-        out.withColumn(
-            "score_q",
-            F.expr("CASE WHEN _d >= 0 THEN 1 ELSE -1 END"
-                   " * ((1000000 * _d * _d) div (_na * _nq))"),
-        )
-        .select(id_col, "score_q")
-        .orderBy(F.desc("score_q"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_score_q(out, k, id_col)
 
 
 # -- product quantization (PQ / ADC) -------------------------------------
@@ -351,26 +322,6 @@ def ivf_topk_quantized(
 # as DuckDB CTEs and hash-matches.
 
 
-def _sqdist(col: Column, centroid: list[int]) -> Column:
-    """Integer squared L2 between an array Column and one literal
-    centroid (JVM fold — same form as clustering._dist_expr)."""
-    lit_c = F.array(*[F.lit(int(v)).cast("bigint") for v in centroid])
-    return F.aggregate(
-        F.zip_with(col, lit_c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _quant_full(vec_col: str) -> Column:
-    from swarm_spark.operators.clustering import QUANT
-
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(QUANT)).cast("bigint"),
-    )
-
-
 def pq_train(
     df: DataFrame,
     dim: int,
@@ -388,13 +339,14 @@ def pq_train(
     clustering.fit_subspace_centroids); per-slice arithmetic is
     bit-identical to the old m×fit_centroids loop. The corpus is never
     shuffled (clustering.py contract)."""
-    from swarm_spark.operators.clustering import fit_subspace_centroids
+    from swarm_spark.operators.clustering import (
+        _quantized, fit_subspace_centroids)
 
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    sub = dim // m
-    vecs = df.select(F.col(id_col), _quant_full(vec_col).alias("q"))
-    return fit_subspace_centroids(vecs, k, iterations, m, sub, id_col=id_col)
+    vecs = _quantized(df, vec_col, id_col)
+    return fit_subspace_centroids(vecs, k, iterations, m, dim // m,
+                                  id_col=id_col)
 
 
 def pq_encode(
@@ -404,32 +356,13 @@ def pq_encode(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, codes array<int>): per subspace, the argmin-distance
-    codeword (lowest code on ties). m·k integer folds per row over ONE
-    3-D codebook literal (m·k·sub separate Literal nodes made Catalyst
-    analysis the bottleneck on small inputs — clustering._lit2d note);
-    this is the write-once compression pass; the codes table is what a
-    100 TB deployment persists and scans."""
+    codeword (lowest code on ties): kernels.subspace_codes, m·k
+    integer folds per row over ONE 3-D codebook literal. This is the
+    write-once compression pass; the codes table is what a 100 TB
+    deployment persists and scans."""
     from swarm_spark.operators.util import spread
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    q = _quant_full(vec_col)
-    lit3d = F.lit([[list(map(int, c)) for c in cb] for cb in codebooks]).cast(
-        "array<array<array<bigint>>>")
-
-    def sub_code(s):
-        sl = F.slice(q, s * sub + 1, F.lit(sub))
-        dists = F.transform(
-            F.element_at(lit3d, (s + 1).cast("int")),
-            lambda c: F.aggregate(
-                F.zip_with(sl, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    codes = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), sub_code)
+    codes = kernels.subspace_codes(kernels.quantize(F.col(vec_col)), codebooks)
     return spread(df).select(F.col(id_col), codes.alias("codes"))
 
 
@@ -447,27 +380,10 @@ def pq_topk(
     math, no UDF. Returns (id, adc) ascending, ties on id. Approximate
     by construction (quantization error); recall is pinned by pytest
     against the exact scorer."""
-    import math as _math
-
-    from swarm_spark.operators.clustering import QUANT
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    if len(query_vec) != m * sub:
-        raise ValueError(f"query dim {len(query_vec)} != {m * sub}")
-    qq = [int(_math.floor(float(x) * QUANT)) for x in query_vec]
-    luts = []
-    for s, cb in enumerate(codebooks):
-        qs = qq[s * sub:(s + 1) * sub]
-        luts.append([sum((a - b) * (a - b) for a, b in zip(qs, c)) for c in cb])
-    lut_col = F.lit([[int(v) for v in lut] for lut in luts]).cast(
-        "array<array<bigint>>")
-    score = F.aggregate(
-        F.zip_with(F.col("codes"), lut_col,
-                   lambda c, l: F.element_at(l, c.cast("int") + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dim = len(codebooks) * len(codebooks[0][0])
+    if len(query_vec) != dim:
+        raise ValueError(f"query dim {len(query_vec)} != {dim}")
+    score = kernels.adc_score(F.col("codes"), codebooks, query_vec)
     return (
         df_codes.select(F.col(id_col), score.alias("adc"))
         .orderBy("adc", id_col)

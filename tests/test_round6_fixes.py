@@ -3,50 +3,9 @@ bit-identical to the shapes they replaced, and the concurrency fixes
 must behave as documented."""
 
 import pyspark.sql.functions as F
-import pytest
 
-from swarm_spark.operators.clustering import (
-    _quantized, cluster_expr, fit_centroids, fit_subspace_centroids)
 from swarm_spark.operators.dedup import _band_buckets, minhash_signature
 from swarm_spark.operators.util import spread
-
-
-@pytest.fixture(scope="module")
-def vecs(spark):
-    import random
-
-    rnd = random.Random(7)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-
-def test_fused_subspace_fit_equals_per_slice_fit(spark, vecs):
-    """fit_subspace_centroids must reproduce m independent
-    fit_centroids runs on each slice bit-for-bit (the pq_train
-    contract after the round-6 fusion)."""
-    q = _quantized(vecs, "embedding", "vec_id")
-    m, sub, k, iters = 2, 4, 3, 2
-    per_slice = [
-        fit_centroids(
-            q.select(F.col("vec_id"), F.slice("q", s * sub + 1, sub).alias("q")),
-            k, iters)
-        for s in range(m)
-    ]
-    fused = fit_subspace_centroids(q, k, iters, m, sub)
-    assert fused == per_slice
-
-
-def test_cluster_expr_matches_assigned(spark, vecs):
-    """The inline assignment expression (2-D literal + transform) must
-    equal the kmeans assignment column (semantic_dedup's inlining)."""
-    from swarm_spark.operators.clustering import kmeans
-
-    q = _quantized(vecs, "embedding", "vec_id")
-    cents = fit_centroids(q, 4, 1)
-    inline = q.select("vec_id", cluster_expr(F.col("q"), cents).alias("c")) \
-        .orderBy("vec_id").collect()
-    full = kmeans(vecs, k=4, iterations=1).orderBy("vec_id").collect()
-    assert [r["c"] for r in inline] == [r["cluster"] for r in full]
 
 
 def test_minhash_signature_matches_unrolled(spark):
